@@ -179,9 +179,10 @@ def make_session(cpus: int):
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "24g")
         .config("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
-        # one task per corpus file (96 round-robin-even files): the
-        # default 4MB openCostInBytes packs the ~1.4MB files several
-        # to a split, collapsing the UDF stage to 1.5 waves at 32c
+        # one split per file for plain scans of the ~1.4MB corpus files;
+        # the extraction scans go through pipeline.read_transcripts,
+        # which lowers openCostInBytes to 64KB, so there the files pack
+        # by bytes into splits of at most maxPartitionBytes
         .config("spark.sql.files.openCostInBytes", str(4 * 1024 * 1024))
         # shuffle files on tmpfs: this VM's virtio disk has high,
         # VARIABLE iowait (3× run-to-run noise) — a real cluster node
@@ -215,10 +216,12 @@ def materialize_transcripts(
     )
     fix_pdf, _, _ = gen_transcripts(n_convs=100, seed=42)
     fix_part = spark.createDataFrame(fix_pdf)
-    # One corpus FILE = one UDF task (make_session pins openCostInBytes
-    # = maxPartitionBytes so files never pack), so the file count IS
-    # the extraction stage's parallelism. Size it to the corpus
-    # (measured r4 A/B on the 5,731-turn headline corpus at local[32]:
+    # Files pack by bytes into the extraction scan's splits (see
+    # pipeline.read_transcripts; at most maxPartitionBytes = 4MB each),
+    # so the file count caps the extraction stage's parallelism. The
+    # sizing below predates that packing, when one corpus FILE was one
+    # UDF task; it is kept so the corpus stays the same (measured r4
+    # A/B on the 5,731-turn headline corpus at local[32]:
     # 96 × ~73 KB files = 96 trivial tasks dominated by per-task
     # Arrow/worker overhead, 1.254 s; 32 packed splits, 0.749 s — the
     # whole BENCH_r03 extract_turns regression):

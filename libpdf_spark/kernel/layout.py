@@ -294,14 +294,11 @@ def assemble_lines_bulk(
     # is exactly one char) — no per-char Python string creation. A
     # numpy U-slot holding "" is NUL padding, indistinguishable from
     # a real "\x00" glyph under the view, so any empty slot falls
-    # back to the list path (which renders "" exactly as before).
+    # back to the list path (which renders "" exactly as before). The
+    # view reads the buffer as little-endian UTF-32, so a big-endian
+    # ">U1" array takes the list path too.
     page_str = None
-    if (
-        n
-        and texts_np.dtype.kind == "U"
-        and texts_np.dtype.itemsize == 4
-        and (texts_np != "").all()
-    ):
+    if n and texts_np.dtype == np.dtype("<U1") and (texts_np != "").all():
         page_str = np.ascontiguousarray(texts_np).view(f"<U{n}")[0]
     else:
         texts_all = texts_np.tolist()

@@ -108,8 +108,8 @@ def q_props_extract(spark, sf_dir):
     """Semi-structured payload projection: pull the integer ``k`` out
     of the JSON ``props`` string and aggregate per event type. The
     extraction is a regexp (portable across engines, JVM-side, no
-    JSON-extension dependency); sums ride DECIMAL so the hash oracle
-    is exact."""
+    JSON-extension dependency); ``k`` sums as an exact long so the
+    hash oracle is exact."""
     F = _F()
     ev = load(spark, sf_dir, "events")
     k = F.regexp_extract("props", r'"k":\s*(\d+)', 1)
@@ -152,8 +152,8 @@ def q_hourly_windows(spark, sf_dir):
     shape in ``streaming/``). The window key is pure integer
     arithmetic on epoch micros (``F.window`` would work too, but a
     computed BIGINT group key aggregates without the struct plumbing
-    and is engine-portable bit-for-bit); value sums accumulate in
-    DECIMAL and ship as DOUBLE for cross-engine dtype parity."""
+    and is engine-portable bit-for-bit); value sums accumulate as exact
+    10⁶-scaled longs and ship as DOUBLE for cross-engine dtype parity."""
     F = _F()
     hour_us = 3_600_000_000
     ev = load(spark, sf_dir, "events").withColumn("ts_us", _ts_us())

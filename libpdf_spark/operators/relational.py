@@ -6,9 +6,9 @@ the shape is cited per function.
 
 Scale notes (100 TB posture):
 * dimension joins broadcast explicitly (``F.broadcast``);
-* sums over doubles go through DECIMAL(18,4) so Spark's partial
-  aggregation order and DuckDB's sequential order produce identical
-  results (exact arithmetic), then cast back to double;
+* money sums add exact 10⁴-scaled BIGINTs (:func:`_scale4`) and divide
+  back once per group, so Spark's partial aggregation order and
+  DuckDB's sequential order produce identical results;
 * window functions partition on the natural key — no global sorts.
 """
 

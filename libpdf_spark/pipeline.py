@@ -22,6 +22,43 @@ Design notes for 100 TB:
   on any partition; output ordering is restored at write time;
 * parse failures NEVER abort the job — they surface as
   ``parse_ok = false`` rows feeding the metrics table.
+
+Task sizing. Every Python task pays a fixed PySpark worker cost,
+whatever its bytes: ``pyspark.worker_util.setup_spark_files`` calls
+``importlib.invalidate_caches()`` per task, and every ``zipimporter``
+on the worker's path (16 of them, ``pyspark.zip`` among them) then
+re-reads its archive directory. Measured on a 4-core host (CPython
+3.11.7, pyspark 4.1.2): that one call takes 165 ms in a worker, and an
+identity ``mapInPandas`` over 64 trivial partitions costs 272 core-ms
+more per task than over 4. The UDF runs on the scan splits, so
+:func:`read_transcripts` sizes them by bytes, not by file count: it
+sets ``spark.sql.files.openCostInBytes`` to
+:data:`SCAN_OPEN_COST_BYTES`. Spark's split planner then uses
+``min(maxPartitionBytes, max(openCost, total / defaultParallelism))``
+as the split size, with each file counted as its bytes plus the open
+cost, so
+
+* a table smaller than ``defaultParallelism × maxPartitionBytes``
+  becomes about one wave: at most ``defaultParallelism + 1`` splits
+  (Spark packs files next-fit, largest first);
+* a larger table keeps the caller's ``maxPartitionBytes`` splits, as
+  before — no split ever exceeds it (a plain ``coalesce(cores)`` has
+  no such bound, so it is not used);
+* one split opens at most about ``maxPartitionBytes / 64 KB`` files
+  (64 at 4 MB, 2,048 at Spark's 128 MB default), so a table of many
+  tiny files cannot collapse into one task.
+
+One wave was chosen over two by a same-session interleaved A/B of the
+full ``read_transcripts → extract_turns → write_stable`` plan on the
+perfbench ``extract_pdf_mix`` seed-5 input (22 files of ~150 KB, 7,791
+turns; 4 cores, ``maxPartitionBytes = openCostInBytes = 4 MB`` before
+the change), six rounds, median (quartiles): one task per file, 22
+tasks, 3.90 s (3.68–4.41); 64 KB open cost, 5 tasks, 2.65 s
+(2.60–2.89); the same plus ``minPartitionNum = 2 × cores``, 9 tasks,
+3.28 s (2.88–3.52); open cost 0, the same 5-task plan as 64 KB, 2.86 s
+(2.67–3.09), which shows the noise. A 32-core host, where one slow
+task holds a whole wave, was not measured; the single wave is not
+checked for stragglers there.
 """
 
 from __future__ import annotations
@@ -265,7 +302,17 @@ def extract_turns(
       that immunity.
 
     Results are identical (each turn is independently extractable);
-    only the exchange placement differs."""
+    only the exchange placement differs. Cost differs beyond the
+    exchange when a sort follows, as in :func:`write_stable`: the
+    sort's range-sampling job reads the child of its exchange, which
+    under ``"input"`` is the Python stage itself, so that stage runs
+    twice. Measured on the perfbench ``extract_pdf_mix`` seed-5 input
+    (4 cores, ``read_transcripts`` → ``extract_turns`` →
+    ``write_stable``): ``"input"`` evaluated 15,582 UDF rows for 7,791
+    turns and took 13.1–14.5 s, against 7,791 rows and 2.75–2.95 s for
+    ``"output"`` (three interleaved rounds); an earlier run with one
+    task per input file took 16.3–17.6 s against 5.5–11.0 s. The
+    default plan's once-per-turn evaluation is pinned by a test."""
     from pyspark.sql import functions as F
 
     if salt_stage not in ("input", "output"):
@@ -334,6 +381,11 @@ def configure_session(builder, shuffle_partitions: int = 32, arrow_batch: int = 
     )
 
 
+# Spark's "cost of opening a file, in bytes it could scan meanwhile"
+# for the extraction scan; see "Task sizing" in the module docstring.
+SCAN_OPEN_COST_BYTES = 64 * 1024
+
+
 def read_transcripts(spark: "SparkSession", path: str, reader_batch: int = 512) -> "DataFrame":
     """Extraction-job transcript scan entrypoint.
 
@@ -346,8 +398,17 @@ def read_transcripts(spark: "SparkSession", path: str, reader_batch: int = 512) 
     :func:`configure_session` — narrow relational tables read in the
     same session keep the default-sized batches until an extraction
     scan runs.
+
+    The scan also sizes its splits, and with them the Python tasks of
+    the ``mapInPandas`` stage that runs on them, by bytes rather than
+    by file count: it sets ``spark.sql.files.openCostInBytes`` to
+    :data:`SCAN_OPEN_COST_BYTES` (Spark 4.1's ``FilePartition`` takes
+    no per-read split option). See the module docstring for the rule
+    and its measurements. Like the batch size, the setting stays on
+    the session for later scans.
     """
     spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", str(reader_batch))
+    spark.conf.set("spark.sql.files.openCostInBytes", str(SCAN_OPEN_COST_BYTES))
     return spark.read.parquet(path)
 
 

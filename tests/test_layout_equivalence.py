@@ -164,3 +164,9 @@ def test_assemble_lines_bulk_view_fast_path_and_empty_slot_fallback():
     obje = assemble_lines_bulk(P(np.array(glyphs2, dtype=object)), lines, 0.1)
     assert [t for t, _ in u1e] == [t for t, _ in obje]
     assert len(u1e[0][0]) == len(u1[0][0]) - 1
+
+    # big-endian UTF-32 slots: the little-endian view would misread
+    # every code point, so they take the list path and render the same
+    be = assemble_lines_bulk(P(np.array(glyphs, dtype=">U1")), lines, 0.1)
+    assert [t for t, _ in be] == [t for t, _ in u1]
+    assert all(np.array_equal(a, b) for (_, a), (_, b) in zip(be, u1))

@@ -3,12 +3,14 @@ stable (conv_id, turn_idx) ordering (the north rule gate)."""
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
 
 from libpdf_spark.config import ExtractConfig
 from libpdf_spark.fixtures import gen_transcripts
-from libpdf_spark.pipeline import extract_turns, extraction_metrics
+from libpdf_spark.pipeline import extract_turns, extraction_metrics, read_transcripts
 
 
 @pytest.fixture(scope="module")
@@ -399,3 +401,129 @@ def test_password_protected_pdf_turn_e2e(spark):
     without = extract_turns(df, ExtractConfig()).orderBy("turn_idx").toPandas()
     assert not bool(without.iloc[0].parse_ok)
     assert "password" in (without.iloc[0].error or "")
+
+
+_FOUR_MB = str(4 * 1024 * 1024)
+_SCAN_CONFS = (
+    "spark.sql.files.maxPartitionBytes",
+    "spark.sql.files.openCostInBytes",
+    "spark.sql.parquet.columnarReaderBatchSize",
+)
+
+
+@pytest.fixture
+def file_scan_session(spark):
+    """The session with ``maxPartitionBytes = openCostInBytes = 4 MB``,
+    as ``bench.make_session`` and the perfbench session set them. Every
+    conf set here or by ``read_transcripts`` is restored afterwards:
+    the ``spark`` fixture is shared by the whole test run."""
+    saved = {k: spark.conf.get(k, None) for k in _SCAN_CONFS}
+    spark.conf.set("spark.sql.files.maxPartitionBytes", _FOUR_MB)
+    spark.conf.set("spark.sql.files.openCostInBytes", _FOUR_MB)
+    try:
+        yield spark
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _scan_split_bytes(df) -> list[int]:
+    """Bytes of file slices in each planned partition of a plain file
+    scan (``FilePartition.files`` of the scan's ``FileScanRDD``)."""
+    scan = df._jdf.queryExecution().executedPlan().collectLeaves().head()
+    return [
+        sum(f.length() for f in p.files()) for p in scan.inputRDD().partitions()
+    ]
+
+
+def test_read_transcripts_packs_small_files_by_bytes(file_scan_session, corpus, tmp_path):
+    """Small files pack into about one wave of scan splits, so the UDF
+    stage pays PySpark's fixed per-task cost about
+    ``defaultParallelism`` times instead of once per file; results are
+    row-identical to the file-per-task plan."""
+    spark = file_scan_session
+    par = spark.sparkContext.defaultParallelism
+    n_files = 3 * par + 1
+    transcripts, _, _ = corpus
+    path = str(tmp_path / "small")
+    spark.createDataFrame(transcripts).repartition(n_files).write.parquet(path)
+    assert len([f for f in os.listdir(path) if f.endswith(".parquet")]) == n_files
+
+    packed = read_transcripts(spark, path)
+    assert packed.rdd.getNumPartitions() <= par + 1
+    cols = ["conv_id", "turn_idx", "doc_found", "parse_ok", "error",
+            "extracted_text", "n_elements", "n_chars", "n_pages", "bytes_in"]
+    got = (
+        extract_turns(packed, ExtractConfig()).select(*cols)
+        .orderBy("conv_id", "turn_idx").toPandas()
+    )
+
+    spark.conf.set("spark.sql.files.openCostInBytes", _FOUR_MB)
+    unpacked = spark.read.parquet(path)
+    assert unpacked.rdd.getNumPartitions() == n_files
+    want = (
+        extract_turns(unpacked, ExtractConfig()).select(*cols)
+        .orderBy("conv_id", "turn_idx").toPandas()
+    )
+    assert len(got) == len(transcripts)
+    pd.testing.assert_frame_equal(got, want)
+
+
+def test_read_transcripts_still_splits_a_large_file(file_scan_session, tmp_path):
+    """Packing never grows a split past ``maxPartitionBytes``: a file
+    larger than it is still split."""
+    import pyspark.sql.functions as F
+
+    spark = file_scan_session
+    # 6,000 rows of 1 KB distinct hex text: about 6 MB that snappy
+    # cannot shrink, in one file
+    text = F.concat(*[
+        F.sha2(F.concat_ws("-", F.col("id").cast("string"), F.lit(str(i))), 256)
+        for i in range(16)
+    ])
+    path = str(tmp_path / "large")
+    spark.range(0, 6000, numPartitions=1).select(text.alias("text")).write.parquet(path)
+    (name,) = [f for f in os.listdir(path) if f.endswith(".parquet")]
+    max_bytes = int(_FOUR_MB)
+    assert os.path.getsize(os.path.join(path, name)) > max_bytes
+
+    splits = _scan_split_bytes(read_transcripts(spark, path))
+    assert len(splits) > 1
+    assert max(splits) <= max_bytes
+
+
+def test_default_plan_runs_udf_once_per_turn(file_scan_session, corpus, tmp_path, monkeypatch):
+    """The default ``extract_turns → write_stable`` plan evaluates the
+    extraction UDF exactly once per input turn: the sort's
+    range-sampling job reads the salted exchange's output instead of
+    re-running the Python stage (it does re-run it under
+    ``salt_stage="input"``, see ``extract_turns``)."""
+    from libpdf_spark import pipeline
+
+    spark = file_scan_session
+    rows_in = spark.sparkContext.accumulator(0)
+    make = pipeline.make_extract_batch
+
+    def counting_extract_batch(cfg):
+        extract_batch = make(cfg)
+
+        def counted(batches):
+            for pdf in batches:
+                rows_in.add(len(pdf))
+                yield pdf
+
+        return lambda batches: extract_batch(counted(batches))
+
+    monkeypatch.setattr(pipeline, "make_extract_batch", counting_extract_batch)
+    transcripts, _, _ = corpus
+    path = str(tmp_path / "in")
+    spark.createDataFrame(transcripts).repartition(4).write.parquet(path)
+    pipeline.write_stable(
+        pipeline.extract_turns(pipeline.read_transcripts(spark, path)),
+        str(tmp_path / "out"),
+    )
+    assert spark.read.parquet(str(tmp_path / "out")).count() == len(transcripts)
+    assert rows_in.value == len(transcripts)
