@@ -15,35 +15,6 @@ import json
 import sys
 
 
-def _element_dict(el) -> dict:
-    out = {
-        "uid": el.uid, "kind": el.kind, "page": el.page,
-        "x0": el.x0, "y0": el.y0, "x1": el.x1, "y1": el.y1,
-        "text": el.text,
-    }
-    if el.number:
-        out["number"] = el.number
-    if el.row is not None:
-        out["row"], out["col"] = el.row, el.col
-    if el.fontname:
-        out["fontname"] = el.fontname
-    if el.ncolor:
-        out["ncolor"] = list(el.ncolor)
-    if el.links:
-        out["links"] = [
-            {"idx_start": l.idx_start, "idx_stop": l.idx_stop, "target": l.target}
-            for l in el.links
-        ]
-    if el.words:
-        out["words"] = [
-            {k: w[k] for k in ("line", "text", "x0", "y0", "x1", "y1")}
-            | {"fontname": w["fontname"],
-               "ncolor": list(w["ncolor"]) if w["ncolor"] else None}
-            for w in el.words
-        ]
-    return out
-
-
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(
         prog="libpdf_spark",
@@ -114,7 +85,12 @@ def main(argv: list[str] | None = None) -> int:
         "pages": root.pages,
         "n_elements": len(root.elements),
         "extracted_text": root.extracted_text,
-        "elements": [_element_dict(e) for e in root.elements],
+        # the pipeline's element records minus empty fields; text
+        # always stays, and so does a 0 (cell row/col)
+        "elements": [
+            {k: v for k, v in e.record().items() if k == "text" or v or v == 0}
+            for e in root.elements
+        ],
     }
     if args.output_format == "stdout":
         print(f"pages: {len(root.pages)}  elements: {len(root.elements)}")
@@ -134,7 +110,7 @@ def main(argv: list[str] | None = None) -> int:
             # folded scalar (tables.py:40,193 FoldedStr); other text
             # keeps the literal-block style
             for e in payload["elements"]:
-                if "row" in e and e.get("text"):
+                if e["kind"] == "cell" and e.get("text"):
                     e["text"] = FoldedStr(e["text"])
             out.write(yaml_dump(payload))
         else:  # jsonl: one element per line (corpus-native)

@@ -22,7 +22,6 @@ stdlib logging. S8/S9 are served by :mod:`libpdf_spark.render`.
 
 from __future__ import annotations
 
-import json
 import logging
 import os
 from typing import NamedTuple
@@ -135,7 +134,7 @@ def _payload_from_source(pdf, password: str = "") -> dict:
     """PDF bytes | path (.pdf / payload .json) | payload dict |
     transcript-turn string → layout payload dict."""
     from libpdf_spark import pdfmini
-    from libpdf_spark.payload import EMPTY_DOC, find_payload
+    from libpdf_spark.payload import EMPTY_DOC, decode, find_payload
 
     if isinstance(pdf, dict):
         out = dict(EMPTY_DOC)
@@ -153,11 +152,7 @@ def _payload_from_source(pdf, password: str = "") -> dict:
             with open(pdf, encoding="utf-8") as fh:
                 text = fh.read()
             doc = find_payload(text)
-            if doc is not None:
-                return doc
-            out = dict(EMPTY_DOC)
-            out.update(json.loads(text))
-            return out
+            return doc if doc is not None else decode(text)
         doc = find_payload(pdf)  # a transcript-turn string
         if doc is not None:
             return doc

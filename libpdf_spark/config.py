@@ -78,7 +78,6 @@ class ExtractConfig:
 
     # --- Spark execution ---
     salt_buckets: int = 8               # salted repartition on conv_id (north_star)
-    arrow_max_records: int = 256        # cap payload bytes per Arrow batch
 
     # chapter-number regex — catalog.py:206-218 (verbatim semantics)
     chapter_number_regex: str = (

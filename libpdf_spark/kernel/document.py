@@ -92,6 +92,40 @@ class DocElement:
     def bbox(self):
         return (self.x0, self.y0, self.x1, self.y1)
 
+    def record(self) -> dict:
+        """The element as plain values — the one serializer, shaped
+        like ``pipeline.ELEMENT_DDL``'s struct (the Spark output and
+        the CLI's JSON/YAML both use it). Word/line ``ncolor`` is an
+        ``{r, g, b}`` struct; element ``ncolor`` is a list."""
+        return {
+            "uid": self.uid, "kind": self.kind, "page": self.page,
+            "x0": self.x0, "y0": self.y0, "x1": self.x1, "y1": self.y1,
+            "text": self.text, "number": self.number,
+            "row": self.row, "col": self.col,
+            "fontname": self.fontname,
+            "ncolor": list(self.ncolor) if self.ncolor else None,
+            "links": [
+                {"idx_start": l.idx_start, "idx_stop": l.idx_stop, "target": l.target}
+                for l in self.links
+            ],
+            "words": [
+                {k: w[k] for k in ("line", "text", "x0", "y0", "x1", "y1", "fontname")}
+                | {"ncolor": _rgb(w["ncolor"])}
+                for w in self.words or []
+            ],
+            "lines": [
+                {k: t[k] for k in ("text", "x0", "y0", "x1", "y1", "fontname")}
+                | {"ncolor": _rgb(t["ncolor"])}
+                for t in self.tlines or []
+            ],
+        }
+
+
+def _rgb(color) -> dict | None:
+    if not color:
+        return None
+    return {"r": float(color[0]), "g": float(color[1]), "b": float(color[2])}
+
 
 @dataclass
 class DocResult:

@@ -22,19 +22,30 @@ reference (chars with geometry/font/color + catalog), per
 
 Coordinates are PDF-standard: origin bottom-left, points
 (reference ``models/position.py:25-52``).
+
+``chars`` comes in three encodings: rows (the list above), v1 columnar
+(:func:`to_columnar_chars`) and v2 packed (:func:`to_packed_chars`,
+what :func:`encode` writes whenever every glyph is one character).
+:func:`decode_chars` is the one decoder for all three; the kernel, the
+PDF writer and the renderer all read chars through it.
+
+The envelope is decoded by stdlib :func:`json.loads` on every host.
+One policy holds for strings: a lone UTF-16 surrogate (U+D800–U+DFFF
+not part of a pair) anywhere in a document is refused. :func:`encode`
+raises ``ValueError`` rather than write one, and :func:`find_payload`
+raises ``ValueError`` on an envelope that carries one, so the turn
+becomes a recorded ``payload:`` failure instead of a string that no
+UTF-8 sink (Arrow, the CLI's files) can hold.
 """
 
 from __future__ import annotations
 
+import base64
 import json
+import re
 from typing import Any
 
-try:  # orjson is ~5× faster on the hot decode path; stdlib fallback
-    import orjson
-
-    _loads = orjson.loads
-except ImportError:  # pragma: no cover
-    _loads = json.loads
+import numpy as np
 
 DOC_OPEN = "<<<LIBPDF_DOC>>>"
 DOC_CLOSE = "<<<END_LIBPDF_DOC>>>"
@@ -59,9 +70,8 @@ def to_columnar_chars(chars: list[dict]) -> dict:
 
     The row encoding costs ~120 JSON bytes per char (key repetition);
     columnar cuts payload size and parse time ~6×, which directly
-    reduces Arrow transfer + memory bandwidth in the hot path. All
-    three encodings are accepted on read (``chars`` as list = rows, as
-    dict = columns, as dict with ``"v": 2`` = packed, below).
+    reduces Arrow transfer + memory bandwidth in the hot path.
+    :func:`decode_chars` reads this and the other two encodings.
     """
     return {
         "page": [c["page"] for c in chars],
@@ -96,10 +106,6 @@ def to_packed_chars(cols: dict) -> dict | None:
     Returns ``None`` when the chars don't fit the packed contract
     (any multi-char glyph) — the caller keeps the v1 columnar form.
     """
-    import base64
-
-    import numpy as np
-
     texts = cols["text"]
     if any(len(t) != 1 for t in texts):
         return None
@@ -126,69 +132,28 @@ def to_packed_chars(cols: dict) -> dict | None:
     }
 
 
-def rle_expand(rle: list, n: int) -> list:
-    out: list = []
-    for v, k in rle:
-        out.extend([v] * int(k))
-    if len(out) != n:
-        raise ValueError("corrupt RLE char attribute")
-    return out
+def _object_array(items: list) -> np.ndarray:
+    """1-D object array even when items are equal-length tuples
+    (plain ``np.array`` would broadcast those to 2-D)."""
+    arr = np.empty(len(items), dtype=object)
+    for i, it in enumerate(items):
+        arr[i] = it
+    return arr
 
 
-def unpack_chars(packed: dict) -> dict:
-    """PACKED (``"v": 2``) → plain columnar dict (lists)."""
-    import base64
-
-    import numpy as np
-
+def _unpack(packed: dict) -> dict[str, np.ndarray]:
+    """PACKED (``"v": 2``) chars → arrays, straight from the buffers:
+    ``text`` is a ``<U1`` array viewed from the UTF-32 encoding (no
+    per-char Python list), ``fontname``/``ncolor`` are object arrays
+    filled per RLE RUN (one broadcast per run instead of one Python
+    object per char; ncolor values arrive as tuples)."""
     n = int(packed["n"])
     text = packed["text"]
     if len(text) != n:
         raise ValueError("corrupt packed chars: text length mismatch")
 
-    def funpack(key: str) -> "np.ndarray":
-        buf = base64.b64decode(packed[key])
-        arr = np.frombuffer(buf, dtype="<f8")
-        if len(arr) != n:
-            raise ValueError(f"corrupt packed chars: {key} length mismatch")
-        return arr
-
-    pages = np.frombuffer(base64.b64decode(packed["page"]), dtype="<i4")
-    if len(pages) != n:
-        raise ValueError("corrupt packed chars: page length mismatch")
-    return {
-        "page": pages,
-        "text": list(text),
-        "x0": funpack("x0"), "y0": funpack("y0"),
-        "x1": funpack("x1"), "y1": funpack("y1"),
-        "fontname": rle_expand(packed.get("fontname_rle") or [[None, n]], n),
-        "ncolor": rle_expand(packed.get("ncolor_rle") or [[None, n]], n),
-    }
-
-
-def unpack_chars_arrays(packed: dict) -> dict:
-    """PACKED (``"v": 2``) → numpy-ready columnar dict (r8 hot path).
-
-    Same values as :func:`unpack_chars` but built for
-    ``CharArrays.from_columnar``: ``text`` is a ``<U1`` array decoded
-    straight from the UTF-32 buffer (no per-char Python list),
-    ``fontname``/``ncolor`` are object arrays filled per RLE RUN (one
-    broadcast per run instead of one Python object per char; ncolor
-    values arrive as the tuples the kernel stores anyway).
-    :func:`unpack_chars` keeps the list-based contract for the
-    writer/renderer/tests."""
-    import base64
-
-    import numpy as np
-
-    n = int(packed["n"])
-    text = packed["text"]
-    if len(text) != n:
-        raise ValueError("corrupt packed chars: text length mismatch")
-
-    def funpack(key: str) -> "np.ndarray":
-        buf = base64.b64decode(packed[key])
-        arr = np.frombuffer(buf, dtype="<f8")
+    def funpack(key: str) -> np.ndarray:
+        arr = np.frombuffer(base64.b64decode(packed[key]), dtype="<f8")
         if len(arr) != n:
             raise ValueError(f"corrupt packed chars: {key} length mismatch")
         return arr
@@ -197,7 +162,7 @@ def unpack_chars_arrays(packed: dict) -> dict:
     if len(pages) != n:
         raise ValueError("corrupt packed chars: page length mismatch")
 
-    def rle_obj(rle: list, conv=None) -> "np.ndarray":
+    def rle_obj(rle: list, conv=None) -> np.ndarray:
         arr = np.empty(n, dtype=object)
         ov = np.empty(1, dtype=object)  # object "scalar" for slice fill
         pos = 0
@@ -221,23 +186,94 @@ def unpack_chars_arrays(packed: dict) -> dict:
     }
 
 
-def encode(doc: dict, columnar: bool = True, packed: bool = True) -> str:
+def decode_chars(chars) -> dict[str, np.ndarray]:
+    """Any ``chars`` encoding (rows, v1 columnar, v2 packed, or
+    ``None``) → one array per attribute: ``page`` int32, ``x0``..``y1``
+    float64, ``text``/``fontname``/``ncolor`` (tuple or ``None``) as
+    object arrays — except v2 ``text``, a ``<U1`` array. Callers that
+    want Python values take ``.tolist()`` of each column."""
+    if not isinstance(chars, dict):
+        chars = to_columnar_chars(chars or [])
+    if chars.get("v") == 2:
+        return _unpack(chars)
+    n = len(chars["page"])
+    return {
+        "page": np.asarray(chars["page"], dtype=np.int32),
+        "text": np.asarray(chars["text"], dtype=object),
+        "x0": np.asarray(chars["x0"], dtype=np.float64),
+        "y0": np.asarray(chars["y0"], dtype=np.float64),
+        "x1": np.asarray(chars["x1"], dtype=np.float64),
+        "y1": np.asarray(chars["y1"], dtype=np.float64),
+        "fontname": np.asarray(chars.get("fontname") or [None] * n, dtype=object),
+        "ncolor": _object_array(
+            [tuple(c) if c else None for c in (chars.get("ncolor") or [None] * n)]
+        ),
+    }
+
+
+# a JSON escape that may encode a surrogate; only a body with one (or
+# with any non-ASCII char — the ensure_ascii writer never emits those)
+# is walked for LONE surrogates. Pairs are legal: the writer escapes
+# every astral char as one. A literal-prefix pattern keeps the scan
+# ~20x cheaper than also matching raw surrogates in the same regex.
+_SURROGATE_ESCAPE = re.compile(r"\\u[dD][89a-fA-F]")
+_SURROGATE = re.compile(r"[\ud800-\udfff]")
+
+
+def _has_lone_surrogate(obj) -> bool:
+    if isinstance(obj, str):
+        return _SURROGATE.search(obj) is not None
+    if isinstance(obj, dict):
+        return any(
+            _has_lone_surrogate(k) or _has_lone_surrogate(v) for k, v in obj.items()
+        )
+    if isinstance(obj, (list, tuple)):
+        return any(map(_has_lone_surrogate, obj))
+    return False
+
+
+def _check_surrogates(body: str, doc) -> None:
+    """Raise ``ValueError`` if ``doc`` (decoded from or encoded to the
+    JSON text ``body``) holds a lone surrogate — the one string policy
+    shared by writer and reader."""
+    maybe = not body.isascii() or _SURROGATE_ESCAPE.search(body)
+    if maybe and _has_lone_surrogate(doc):
+        raise ValueError("lone UTF-16 surrogate in layout payload")
+
+
+def encode(doc: dict) -> str:
     """Compact-serialize a layout document for embedding in a turn.
 
-    ``packed=True`` (default) upgrades single-char-glyph columnar chars
-    to the v2 packed encoding — ~7× faster to decode than JSON float
-    arrays; falls back to v1 columnar automatically otherwise."""
+    Row chars are written v2 packed — ~7× faster to decode than JSON
+    float arrays — or v1 columnar when any glyph is more than one
+    character. Raises ``ValueError`` on a lone surrogate (see the
+    module docstring)."""
     chars = doc.get("chars")
-    if columnar and isinstance(chars, list) and chars:
+    if isinstance(chars, list) and chars:
         doc = dict(doc)
         doc["chars"] = to_columnar_chars(chars)
         chars = doc["chars"]
-    if packed and isinstance(chars, dict) and "v" not in chars and chars.get("text"):
+    if isinstance(chars, dict) and "v" not in chars and chars.get("text"):
         p = to_packed_chars(chars)
         if p is not None:
             doc = dict(doc)
             doc["chars"] = p
-    return json.dumps(doc, separators=(",", ":"), sort_keys=True)
+    body = json.dumps(doc, separators=(",", ":"), sort_keys=True)
+    _check_surrogates(body, doc)
+    return body
+
+
+def decode(body: str) -> dict:
+    """Parse one JSON layout document (the envelope body, or a bare
+    payload file) into a full payload dict. Raises ``ValueError`` on
+    bad JSON, a non-object document or a lone surrogate."""
+    doc = json.loads(body)
+    if not isinstance(doc, dict):
+        raise ValueError("layout payload is not an object")
+    _check_surrogates(body, doc)
+    out = dict(EMPTY_DOC)
+    out.update(doc)
+    return out
 
 
 def embed(doc: dict, prefix: str = "", suffix: str = "") -> str:
@@ -247,8 +283,6 @@ def embed(doc: dict, prefix: str = "", suffix: str = "") -> str:
 
 def embed_pdf(pdf_bytes: bytes, prefix: str = "", suffix: str = "") -> str:
     """Wrap real PDF byte-stream content (base64) inside a turn."""
-    import base64
-
     b64 = base64.b64encode(pdf_bytes).decode("ascii")
     return f"{prefix}{PDF_OPEN}{b64}{PDF_CLOSE}{suffix}"
 
@@ -270,17 +304,9 @@ def find_payload(text: str | None, pdf_password: str = "") -> dict | None:
         stop = text.find(DOC_CLOSE, start)
         if stop < 0:
             raise ValueError("unterminated layout payload")
-        body = text[start + len(DOC_OPEN) : stop]
-        doc = _loads(body)
-        if not isinstance(doc, dict):
-            raise ValueError("layout payload is not an object")
-        out = dict(EMPTY_DOC)
-        out.update(doc)
-        return out
+        return decode(text[start + len(DOC_OPEN) : stop])
     start = text.find(PDF_OPEN)
     if start >= 0:
-        import base64
-
         from libpdf_spark import pdfmini
 
         stop = text.find(PDF_CLOSE, start)

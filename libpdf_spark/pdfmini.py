@@ -2047,15 +2047,12 @@ def _expand_objstm(stm: Stream, objects: dict[int, object]) -> None:
 
 
 def _rows_from_chars(chars) -> list[dict]:
-    if isinstance(chars, dict):  # columnar/packed → rows
-        if chars.get("v") == 2:
-            from libpdf_spark.payload import unpack_chars
+    """Any payload char encoding → one dict per glyph (the writer's
+    shape), through the codec's one decoder."""
+    from libpdf_spark.payload import decode_chars
 
-            chars = unpack_chars(chars)
-        n = len(chars["page"])
-        keys = [k for k in ("page", "text", "x0", "y0", "x1", "y1", "fontname", "ncolor") if k in chars]
-        return [{k: chars[k][i] for k in keys} for i in range(n)]
-    return list(chars or [])
+    cols = {k: v.tolist() for k, v in decode_chars(chars).items()}
+    return [dict(zip(cols, vals)) for vals in zip(*cols.values())]
 
 
 _META_TO_INFO = {
@@ -3039,19 +3036,22 @@ def _glyph_to_char(name: str) -> str | None:
     ch = agl.get(name)
     if ch is not None:
         return ch
+    cp = None
     if name.startswith("uni") and len(name) >= 7:
         try:
-            return chr(int(name[3:7], 16))
+            cp = int(name[3:7], 16)
         except ValueError:
             return None
-    if name.startswith("u") and 5 <= len(name) <= 7:
+    elif name.startswith("u") and 5 <= len(name) <= 7:
         try:
-            # chr() itself raises on > 0x10FFFF — keep it inside the
-            # guard so a corrupt uXXXXXX name stays a None fallback
-            return chr(int(name[1:], 16))
-        except (ValueError, OverflowError):
+            cp = int(name[1:], 16)
+        except ValueError:
             return None
-    return None
+    # surrogates are not characters (AGL spec: such names are
+    # unmapped); chr() raises past 0x10FFFF
+    if cp is None or 0xD800 <= cp <= 0xDFFF or cp > 0x10FFFF:
+        return None
+    return chr(cp)
 
 
 def _base_encoding_map(name: str) -> dict[int, str]:
@@ -3592,9 +3592,14 @@ def _interpret_content(
 ) -> None:
     """Replay one page's content stream into payload rows.
 
-    ``chars`` is the COLUMNAR payload encoding (parallel lists — the
-    codec's fast format, ``payload.to_columnar_chars``): ~2× cheaper
-    than a dict per glyph on the hot extraction path.
+    ``chars`` is the v1 COLUMNAR payload encoding (parallel lists,
+    ``payload.to_columnar_chars``): ~2× cheaper than a dict per glyph
+    on the hot extraction path. The kernel reads it through
+    ``payload.decode_chars`` like every other char encoding. Glyph
+    text never holds a lone surrogate, the JSON codec's string policy:
+    UTF-16 sources map one to U+FFFD (or fail the parse), a surrogate
+    char code extracts as U+FFFD, and ``uniD800``-style glyph names
+    are unmapped.
 
     Text state per PDF 32000 §9: a line matrix advanced by Td/TD/T*,
     a text matrix advanced per glyph, both composed with the CTM. The
@@ -3785,7 +3790,11 @@ def _interpret_content(
                 d_ = encmap.get(code)
                 if d_ is not None:
                     return d_
-            return code_texts[k] if code_texts is not None else chr(code)
+            if code_texts is not None:
+                return code_texts[k]
+            # a surrogate code is no character: U+FFFD, like the UTF-16
+            # path — Arrow cannot serialize a lone surrogate
+            return chr(code) if not 0xD800 <= code <= 0xDFFF else "\ufffd"
 
         if two and font.get("vertical"):
             # vertical writing mode (§9.7.4.2, the -V CMaps): the

@@ -116,63 +116,6 @@ EXTRACT_SCHEMA = (
 )
 
 
-def _rgb(color) -> dict | None:
-    if not color:
-        return None
-    return {"r": float(color[0]), "g": float(color[1]), "b": float(color[2])}
-
-
-def _element_rows(result) -> list[dict]:
-    rows = []
-    for e in result.elements:
-        rows.append(
-            {
-                "uid": e.uid,
-                "kind": e.kind,
-                "page": e.page,
-                "x0": e.x0,
-                "y0": e.y0,
-                "x1": e.x1,
-                "y1": e.y1,
-                "row": e.row,
-                "col": e.col,
-                "text": e.text,
-                "number": e.number,
-                "fontname": e.fontname,
-                "ncolor": list(e.ncolor) if e.ncolor else None,
-                "links": [
-                    {
-                        "idx_start": l.idx_start,
-                        "idx_stop": l.idx_stop,
-                        "target": l.target,
-                    }
-                    for l in e.links
-                ],
-                "words": [
-                    {
-                        "line": w["line"], "text": w["text"],
-                        "x0": w["x0"], "y0": w["y0"],
-                        "x1": w["x1"], "y1": w["y1"],
-                        "fontname": w["fontname"],
-                        "ncolor": _rgb(w["ncolor"]),
-                    }
-                    for w in (e.words or [])
-                ],
-                "lines": [
-                    {
-                        "text": l["text"],
-                        "x0": l["x0"], "y0": l["y0"],
-                        "x1": l["x1"], "y1": l["y1"],
-                        "fontname": l["fontname"],
-                        "ncolor": _rgb(l["ncolor"]),
-                    }
-                    for l in (e.tlines or [])
-                ],
-            }
-        )
-    return rows
-
-
 def make_extract_batch(cfg: ExtractConfig):
     """Build the ``mapInPandas`` function (cfg travels in the closure —
     the broadcast-config pattern replacing the reference's module
@@ -234,7 +177,9 @@ def make_extract_batch(cfg: ExtractConfig):
                 out["extracted_text"].append(
                     result.extracted_text if result else None
                 )
-                out["elements"].append(_element_rows(result) if result else [])
+                out["elements"].append(
+                    [e.record() for e in result.elements] if result else []
+                )
                 out["n_elements"].append(len(result.elements) if result else 0)
                 out["n_chars"].append(result.n_chars if result else 0)
                 out["n_pages"].append(len(result.pages) if result else 0)

@@ -226,6 +226,36 @@ def test_cli_keep_words(pdf_path, tmp_path):
     assert {"line", "text", "x0", "fontname"} <= set(w)
 
 
+def test_cli_keep_words_matches_pipeline_elements(spark, pdf_path, tmp_path):
+    """One element serializer: the CLI's JSON ``elements`` are the
+    pipeline's ``elements`` structs with empty fields dropped — words,
+    lines and their ``{r, g, b}`` ncolor included."""
+    import pandas as pd
+
+    from libpdf_spark.config import ExtractConfig
+    from libpdf_spark.payload import embed_pdf
+    from libpdf_spark.pipeline import extract_turns
+
+    out = tmp_path / "w.json"
+    r = _run_cli(pdf_path, "-of", "json", "-o", str(out), "--keep-words")
+    assert r.returncode == 0, r.stderr
+    cli = json.loads(out.read_text())["elements"]
+
+    with open(pdf_path, "rb") as fh:
+        turn = embed_pdf(fh.read())
+    t = pd.DataFrame({"conv_id": ["c"], "turn_idx": pd.array([0], dtype="int32"),
+                      "text": [turn], "tool": [None]})
+    row = extract_turns(spark.createDataFrame(t), ExtractConfig(keep_words=True)).first()
+    assert row.parse_ok, row.error
+    piped = [
+        {k: v for k, v in e.asDict(recursive=True).items()
+         if k == "text" or v or v == 0}
+        for e in row.elements
+    ]
+    assert any(e.get("lines") for e in cli)
+    assert cli == piped
+
+
 def test_load_pdf_password():
     """`load(pdf, pdf_password=...)` opens password-protected bytes;
     without the password the ValueError surfaces to the caller (the

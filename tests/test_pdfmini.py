@@ -1149,6 +1149,22 @@ def test_predefined_ucs2_cmap_roundtrip():
         assert via_pdf.extracted_text == plain_extract.extracted_text
 
 
+def test_ucs2_surrogate_code_extracts_as_replacement_char():
+    """A UCS-2 CMap code in U+D800-U+DFFF is no character: it extracts
+    as U+FFFD, like a lone surrogate on the UTF-16 path, so the text
+    stays serializable (Arrow rejects a lone surrogate)."""
+    doc = {
+        "pages": [{"number": 1, "width": 612.0, "height": 792.0}],
+        "chars": [
+            dict(page=1, text=t, x0=72.0 + 6 * i, y0=700.0,
+                 x1=78.0 + 6 * i, y1=710.0, fontname="Mono")
+            for i, t in enumerate("A\ud800B")
+        ],
+    }
+    got = parse_pdf(write_pdf(doc, cid_font="ucs2"))["chars"]["text"]
+    assert got == ["A", "\ufffd", "B"]
+
+
 def test_predefined_cid_map_values():
     """The generated table pins the publicly-documented sequential
     Adobe rows: proportional Latin 1-95 (half-width 231-325 for HW
@@ -1367,6 +1383,9 @@ def test_agl_map_generation():
     assert _glyph_to_char("uni4E2D") == "中"
     assert _glyph_to_char("u1F600") == "😀"
     assert _glyph_to_char("nonexistentglyphname") is None
+    # surrogate code points are no characters: unmapped, not leaked
+    assert _glyph_to_char("uniD800") is None
+    assert _glyph_to_char("uDFFF") is None
 
 
 def test_inline_image_becomes_figure():

@@ -98,6 +98,41 @@ def test_corrupt_payload_is_isolated(spark):
     assert bool(out.loc[1, "doc_found"]) is False
 
 
+def test_lone_surrogate_turn_is_isolated(spark):
+    """A JSON envelope whose glyph is a lone ``\\ud800`` escape is one
+    recorded ``payload:`` failure; the turns around it in the same
+    Arrow batch still extract. (Decoded into the text instead, the
+    surrogate fails the UDF's Arrow output conversion — outside the
+    per-turn isolation — and with it the whole job.)"""
+    from libpdf_spark.fixtures import FAMILIES
+    from libpdf_spark.payload import DOC_CLOSE, DOC_OPEN, embed
+
+    b = FAMILIES["plain_paragraphs"]()
+    bad = (
+        DOC_OPEN
+        + '{"pages":[{"number":1,"width":612.0,"height":792.0}],'
+        '"chars":{"page":[1],"text":["\\ud800"],'
+        '"x0":[72.0],"y0":[700.0],"x1":[78.0],"y1":[710.0]}}'
+        + DOC_CLOSE
+    )
+    pdf = pd.DataFrame(
+        {
+            "conv_id": ["s1"] * 3,
+            "turn_idx": pd.array([0, 1, 2], dtype="int32"),
+            "role": ["tool"] * 3,
+            "text": [embed(b.build()), bad, embed(b.build())],
+            "tool": [None] * 3,
+            "ts": pd.to_datetime(["2026-01-01"] * 3),
+        }
+    )
+    df = spark.createDataFrame(pdf).coalesce(1)  # one task, one batch
+    out = extract_turns(df, ExtractConfig(), salted=False).toPandas()
+    out = out.sort_values("turn_idx").reset_index(drop=True)
+    assert out.parse_ok.tolist() == [True, False, True]
+    assert out.loc[1, "error"].startswith("payload: ValueError"), out.loc[1, "error"]
+    assert out.loc[0, "extracted_text"] == out.loc[2, "extracted_text"] == b.expected_text()
+
+
 def test_payload_in_tool_column(spark):
     """A document embedded in the `tool` field (not `text`) extracts
     identically — the pipeline probes text first, then tool."""

@@ -160,8 +160,9 @@ def test_build_boxes_conserves_every_char(doc):
 
     from libpdf_spark.config import ExtractConfig
     from libpdf_spark.kernel.layout import CharArrays, build_boxes
+    from libpdf_spark.payload import decode_chars
 
-    chars = CharArrays.from_records(doc["chars"])
+    chars = CharArrays(**decode_chars(doc["chars"]))
     boxes = build_boxes(chars, ExtractConfig())
     seen = np.concatenate([b.char_idx for b in boxes]) if boxes else np.array([])
     assert sorted(seen.tolist()) == list(range(len(chars)))
@@ -182,9 +183,10 @@ def test_words_lines_partition_box_chars(doc):
         box_words_lines,
         build_boxes,
     )
+    from libpdf_spark.payload import decode_chars
 
     cfg = ExtractConfig()
-    chars = CharArrays.from_records(doc["chars"])
+    chars = CharArrays(**decode_chars(doc["chars"]))
     for b in build_boxes(chars, cfg):
         words, lines = box_words_lines(chars, b, cfg.word_margin)
         assert len(lines) == len(b.line_spans)
@@ -213,24 +215,108 @@ def test_extraction_text_contains_all_glyphs(doc):
 @settings(**SETTINGS)
 @given(doc=grid_doc())
 def test_packed_payload_roundtrip_bit_exact(doc):
-    """v2 packed chars decode to EXACTLY the v1 columnar values
-    (float64 buffers round-trip bit-exact; glyphs/attrs verbatim)."""
+    """Rows, v1 columnar and v2 packed chars decode through the one
+    decoder to EXACTLY the same values (float64 buffers round-trip
+    bit-exact; glyphs/attrs verbatim), and extraction cannot tell the
+    three encodings apart."""
+    from libpdf_spark.config import ExtractConfig
+    from libpdf_spark.kernel.document import extract_document
     from libpdf_spark.payload import (
+        decode_chars,
         to_columnar_chars,
         to_packed_chars,
-        unpack_chars,
     )
 
     cols = to_columnar_chars(doc["chars"])
     packed = to_packed_chars(cols)
     assert packed is not None and packed["v"] == 2
-    back = unpack_chars(packed)
-    assert list(back["text"]) == cols["text"]
-    assert list(back["page"]) == cols["page"]
-    for k in ("x0", "y0", "x1", "y1"):
-        assert back[k].tolist() == cols[k]  # bit-exact, no rounding
-    assert back["fontname"] == cols["fontname"]
-    assert back["ncolor"] == [list(c) if c else None for c in cols["ncolor"]]
+    encodings = {"rows": doc["chars"], "v1": cols, "v2": packed}
+    decoded = {name: decode_chars(c) for name, c in encodings.items()}
+    assert decoded["v2"]["text"].dtype == "<U1"
+    assert decoded["v1"]["text"].dtype == object
+    for d in decoded.values():
+        assert d["text"].tolist() == cols["text"]
+        assert d["page"].dtype == "int32"
+        assert d["page"].tolist() == cols["page"]
+        for k in ("x0", "y0", "x1", "y1"):
+            assert d[k].dtype == "float64"
+            assert d[k].tolist() == cols[k]  # bit-exact, no rounding
+        assert d["fontname"].tolist() == cols["fontname"]
+        assert d["ncolor"].tolist() == [tuple(c) for c in cols["ncolor"]]
+
+    cfg = ExtractConfig(keep_words=True)
+    results = {
+        name: extract_document(dict(doc, chars=c), cfg)
+        for name, c in encodings.items()
+    }
+    base = results["rows"]
+    for r in results.values():
+        assert r.extracted_text == base.extracted_text
+        assert r.n_chars == base.n_chars
+        assert [e.record() for e in r.elements] == [
+            e.record() for e in base.elements
+        ]
+
+
+def _is_lone_surrogate(ch: str) -> bool:
+    return 0xD800 <= ord(ch) <= 0xDFFF
+
+
+_glyph = st.one_of(
+    st.characters(min_codepoint=0x41, max_codepoint=0x5A),      # A-Z
+    st.characters(min_codepoint=0x10000, max_codepoint=0x10FFFF),  # astral
+    st.characters(min_codepoint=0xD800, max_codepoint=0xDFFF),  # surrogate
+)
+
+
+@settings(max_examples=100, deadline=None)
+@given(glyphs=st.lists(_glyph, min_size=1, max_size=12))
+def test_lone_surrogate_policy_roundtrip(glyphs):
+    """embed → find_payload → extract_document returns every glyph
+    exactly, astral chars included — or ``encode`` refuses the document
+    with ``ValueError``, which it does exactly when a glyph is a lone
+    surrogate. The writer never emits what the reader rejects."""
+    import pytest
+
+    from libpdf_spark.config import ExtractConfig
+    from libpdf_spark.kernel.document import extract_document
+    from libpdf_spark.payload import embed, find_payload
+
+    doc = {
+        "pages": [{"number": 1, "width": 612.0, "height": 792.0}],
+        "chars": [
+            dict(page=1, text=g, x0=72.0 + 6.0 * i, y0=700.0,
+                 x1=78.0 + 6.0 * i, y1=710.0, fontname="Mono")
+            for i, g in enumerate(glyphs)
+        ],
+    }
+    if any(map(_is_lone_surrogate, glyphs)):
+        with pytest.raises(ValueError, match="surrogate"):
+            embed(doc)
+        return
+    turn = embed(doc, prefix="see: ", suffix=" ok")
+    got = extract_document(find_payload(turn), ExtractConfig())
+    assert got.extracted_text == "".join(glyphs)
+
+
+def test_lone_surrogate_envelope_is_refused():
+    """A hand-written envelope with a lone ``\\ud800`` escape raises
+    ``ValueError`` (a recorded ``payload:`` failure in the pipeline);
+    a surrogate PAIR and an escaped backslash before ``ud800`` are
+    ordinary text."""
+    import pytest
+
+    from libpdf_spark.payload import DOC_CLOSE, DOC_OPEN, find_payload
+
+    def turn(title_json: str) -> str:
+        return f'{DOC_OPEN}{{"meta":{{"title":"{title_json}"}}}}{DOC_CLOSE}'
+
+    with pytest.raises(ValueError, match="surrogate"):
+        find_payload(turn("x\\ud800y"))
+    with pytest.raises(ValueError, match="surrogate"):
+        find_payload(turn("\\udc00\\ud83d"))  # pair in the wrong order
+    assert find_payload(turn("\\ud83d\\ude00"))["meta"]["title"] == "\U0001F600"
+    assert find_payload(turn("\\\\ud800"))["meta"]["title"] == "\\ud800"
 
 
 def test_multichar_glyphs_fall_back_to_v1():

@@ -83,17 +83,18 @@ def test_row_spanning_merge():
 
 from libpdf_spark.kernel.layout import CharArrays
 from libpdf_spark.kernel.tables import fill_cell_text
+from libpdf_spark.payload import decode_chars
 
 
 def _chars(specs, page=1, h=10.0, w=6.0):
     """specs: list of (text, x0, y0) one-char entries on a 6x10 grid."""
-    return CharArrays.from_records(
+    return CharArrays(**decode_chars(
         [
             dict(page=page, text=t, x0=x, y0=y, x1=x + w, y1=y + h,
                  fontname="Mono", ncolor=(0.0, 0.0, 0.0))
             for t, x, y in specs
         ]
-    )
+    ))
 
 
 def _one_cell_table(x0=50.0, y0=600.0, x1=350.0, y1=700.0):
